@@ -18,13 +18,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from sparkstreaming_spark.compat import ensure_protobuf
-
-# Before ANY JVM launch: make google.protobuf importable (vendored shim if
-# the real wheel is absent) so transformWithState workers inherit it via
-# PYTHONPATH. No-op when protobuf is installed. See compat.py.
-ensure_protobuf()
-
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 ROCKSDB_PROVIDER = (

@@ -24,6 +24,7 @@ config, not code changes.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 from collections.abc import Callable
@@ -118,8 +119,19 @@ def start_kpi_queries(
 
 
 def await_all(queries: list[StreamingQuery], timeout_sec: float | None = None) -> None:
+    """Wait for every query to terminate. If one is still running after
+    `timeout_sec`, stop all of them and raise TimeoutError — a timed-out
+    stream never hands back a partial result."""
     for q in queries:
-        q.awaitTermination(timeout_sec) if timeout_sec else q.awaitTermination()
+        if timeout_sec is None:
+            q.awaitTermination()
+        elif not q.awaitTermination(timeout_sec):
+            for other in queries:
+                other.stop()
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} still running after "
+                f"{timeout_sec}s; stopped"
+            )
 
 
 def run_available_now(
@@ -138,22 +150,31 @@ def run_available_now(
 
     `state_partitions` overrides the scoped state-partition default for
     queries whose state cardinality is known to the caller (see
-    stream_state_partitions: size to state, not CPUs)."""
+    stream_state_partitions: size to state, not CPUs).
+
+    Raises TimeoutError if the drain is not done within `timeout_sec`.
+    A checkpoint dir made here (`checkpoint_base=None`) is deleted once
+    the query has stopped, whether it finished or failed; the memory
+    table does not need it."""
     spark = stream_df.sparkSession
     name = query_name or f"run_{uuid.uuid4().hex[:8]}"
     plan = transform(stream_df) if transform else stream_df
-    with stream_state_partitions(spark, state_partitions):
-        q = (
-            plan.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(checkpoint_base, name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(timeout_sec)
-        finally:
-            if q.isActive:
+    ckpt = _checkpoint_dir(checkpoint_base, name)
+    try:
+        with stream_state_partitions(spark, state_partitions):
+            q = (
+                plan.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                await_all([q], timeout_sec)
+            finally:
                 q.stop()
+    finally:
+        if checkpoint_base is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)

@@ -64,74 +64,46 @@ def running_distinct_count(
     )
 
 
+TOPN_STATE = "vals array<double>"
+TOPN_OUT = "key string, rk int, value double"
+
+
 def streaming_topn_values(
     stream_df: DataFrame, key_col: str, value_col: str, n: int = 5
 ) -> DataFrame:
-    """Per-key running top-N values via the Spark 4 stateful-processor API
-    (`transformWithStateInPandas` + ValueState) — a streaming op the
-    built-in aggregates refuse (no collect-top-k on streams; a windowed
-    rank needs the whole partition).
+    """Per-key running top-N values via applyInPandasWithState — a
+    streaming op the built-in aggregates refuse (no collect-top-k on
+    streams; a windowed rank needs the whole partition).
 
     State per key is EXACTLY the current top-N array (bounded, unlike a
-    naive collect_list), stored in the RocksDB-backed state store (the
-    provider transformWithState requires — also the at-scale choice).
-    Output (update mode): one row per (key, rank) each micro-batch the
-    key appears in. Order-insensitive, so availableNow over a bounded
-    input reproduces the batch per-key top-N exactly.
-
-    DEPENDENCY: the transformWithState protocol needs `google.protobuf`.
-    Real clusters ship it; this container doesn't, so `compat
-    .ensure_protobuf()` falls back to the repo's minimal pure-Python
-    proto3 runtime (`sparkstreaming_spark/_vendor/`, clean-room from the
-    published wire spec). Every request byte it emits is parsed by the
-    JVM's real protobuf inside the state server, which makes the
-    end-to-end test a strong verifier of the shim itself.
-    """
-    from sparkstreaming_spark.compat import ensure_protobuf_on_workers
-
-    if not ensure_protobuf_on_workers(stream_df.sparkSession):
-        raise RuntimeError(
-            "transformWithStateInPandas requires google.protobuf (state "
-            "protocol); neither an installed protobuf nor the vendored "
-            "fallback is importable"
-        )
-
+    naive collect_list). Output (update mode): one row per (key, rank)
+    each micro-batch the key appears in. Order-insensitive, so
+    availableNow over a bounded input reproduces the batch per-key
+    top-N exactly."""
     from pyspark.sql import functions as F
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
-    class _TopN(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("topn", "vals array<double>")
-
-        def handleInputRows(self, key, rows, timer_values):
-            cur = list(self._state.get()[0]) if self._state.exists() else []
-            for pdf in rows:
-                cur.extend(float(v) for v in pdf["value"])
-            cur = sorted(cur, reverse=True)[:n]
-            self._state.update((cur,))
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]] * len(cur),
-                    "rk": range(1, len(cur) + 1),
-                    "value": cur,
-                }
-            )
-
-        def close(self) -> None:
-            pass
+    def update(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        cur = list(state.get[0]) if state.exists else []
+        for pdf in pdfs:
+            cur.extend(pdf["value"].tolist())
+        cur = sorted(cur, reverse=True)[:n]
+        state.update((cur,))
+        yield pd.DataFrame(
+            {"key": [key[0]] * len(cur), "rk": range(1, len(cur) + 1), "value": cur}
+        )
 
     narrowed = stream_df.select(
         F.col(key_col).cast("string").alias("key"),
         F.col(value_col).cast("double").alias("value"),
     )
-    return narrowed.groupBy("key").transformWithStateInPandas(
-        _TopN(),
-        outputStructType="key string, rk int, value double",
-        outputMode="Update",
-        timeMode="None",
+    return narrowed.groupBy("key").applyInPandasWithState(
+        update,
+        outputStructType=TOPN_OUT,
+        stateStructType=TOPN_STATE,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -1388,6 +1388,18 @@ QUERIES["evt_user_growth"] = QuerySpec(
 )
 
 
+def _mean_micros(total: str, n: str, div: str) -> str:
+    """SQL for round-half-up(total / n) over integer micro-units, with the
+    engine's integer-division operator `div` (Spark `div`, DuckDB `//`).
+    Integer arithmetic is exact in both engines, so a mean that lands on
+    a 7th-digit half tie rounds the same way in each; a float mean does
+    not (Spark and DuckDB accumulate the sum in different orders)."""
+    return (
+        f"CASE WHEN {total} < 0 THEN -((2 * -{total} + {n}) {div} (2 * {n})) "
+        f"ELSE (2 * {total} + {n}) {div} (2 * {n}) END"
+    )
+
+
 def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive seasonal decomposition of the hourly value series: the
     hour-of-day seasonal component (hod mean − grand mean) plus the
@@ -1397,44 +1409,74 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE hash aggregate reduces the fact table to the hourly
     rollup (bounded by the time span, not the event count); the grand
     mean / hod mean windows and the final aggregate all run on that
-    bounded rollup. Intermediates round to 6 dp so both engines subtract
-    identical doubles."""
+    bounded rollup. Every mean is 6-dp and is computed exactly on
+    integer micro-units (values rounded to 6 dp first), so no half tie
+    can round differently here and in the DuckDB twin."""
     ev = read_table(spark, sf_dir, "events")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
-        F.round(F.avg("value"), 6).alias("hv")
+        F.sum(F.round(F.col("value") * 1_000_000).cast("long")).alias("s"),
+        F.count(F.lit(1)).alias("n"),
+    ).select(
+        F.hour("h").alias("hod"),
+        F.expr(_mean_micros("s", "n", "div")).alias("hv"),
     )
     w_all = Window.partitionBy()
-    w_hod = Window.partitionBy(F.hour("h"))
+    w_hod = Window.partitionBy("hod")
     t = hourly.select(
-        F.hour("h").alias("hod"),
+        "hod",
         "hv",
-        F.round(F.avg("hv").over(w_all), 6).alias("mu"),
-        F.round(F.avg("hv").over(w_hod), 6).alias("hm"),
+        F.sum("hv").over(w_all).alias("s_all"),
+        F.count(F.lit(1)).over(w_all).alias("n_all"),
+        F.sum("hv").over(w_hod).alias("s_hod"),
+        F.count(F.lit(1)).over(w_hod).alias("n_hod"),
+    ).select(
+        "hod",
+        "hv",
+        F.expr(_mean_micros("s_all", "n_all", "div")).alias("mu"),
+        F.expr(_mean_micros("s_hod", "n_hod", "div")).alias("hm"),
     )
     return t.groupBy("hod").agg(
         F.count(F.lit(1)).alias("n_hours"),
-        F.round(F.first("hm") - F.first("mu"), 6).alias("seasonal"),
-        F.round(F.avg(F.abs(F.col("hv") - F.col("hm"))), 6).alias(
+        ((F.first("hm") - F.first("mu")) / 1e6).alias("seasonal"),
+        F.sum(F.abs(F.col("hv") - F.col("hm"))).alias("s_res"),
+    ).select(
+        "hod",
+        "n_hours",
+        "seasonal",
+        (F.expr(_mean_micros("s_res", "n_hours", "div")) / 1e6).alias(
             "avg_abs_resid"
         ),
     )
 
 
-ORACLE_SEASONAL = """
+ORACLE_SEASONAL = f"""
 WITH hourly AS (
-  SELECT date_trunc('hour', ts) AS h, round(avg(value), 6) AS hv
-  FROM events GROUP BY 1
+  SELECT CAST(extract(hour FROM date_trunc('hour', ts)) AS INT) AS hod,
+         sum(CAST(round(value * 1000000) AS BIGINT)) AS s, count(*) AS n
+  FROM events GROUP BY date_trunc('hour', ts)
+),
+hv AS (SELECT hod, {_mean_micros("s", "n", "//")} AS hv FROM hourly),
+sums AS (
+  SELECT hod, hv,
+         sum(hv) OVER () AS s_all, count(*) OVER () AS n_all,
+         sum(hv) OVER (PARTITION BY hod) AS s_hod,
+         count(*) OVER (PARTITION BY hod) AS n_hod
+  FROM hv
 ),
 t AS (
-  SELECT CAST(extract(hour FROM h) AS INT) AS hod, hv,
-         round(avg(hv) OVER (), 6) AS mu,
-         round(avg(hv) OVER (PARTITION BY extract(hour FROM h)), 6) AS hm
-  FROM hourly
+  SELECT hod, hv, {_mean_micros("s_all", "n_all", "//")} AS mu,
+         {_mean_micros("s_hod", "n_hod", "//")} AS hm
+  FROM sums
+),
+r AS (
+  SELECT hod, count(*) AS n_hours, max(hm) - max(mu) AS d,
+         sum(abs(hv - hm)) AS s_res
+  FROM t GROUP BY hod
 )
-SELECT hod, count(*) AS n_hours,
-       round(max(hm) - max(mu), 6) AS seasonal,
-       round(avg(abs(hv - hm)), 6) AS avg_abs_resid
-FROM t GROUP BY hod
+SELECT hod, n_hours, CAST(d AS DOUBLE) / 1000000 AS seasonal,
+       CAST({_mean_micros("s_res", "n_hours", "//")} AS DOUBLE) / 1000000
+         AS avg_abs_resid
+FROM r
 """
 
 

@@ -23,7 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sinks.upsert import UpsertSink
-from ..streaming.pipeline import run_available_now, stream_state_partitions
+from ..streaming.pipeline import (
+    await_all,
+    run_available_now,
+    stream_state_partitions,
+)
 from ..streaming.producer import produce_segments
 from . import QuerySpec
 from .events import ORACLE_SESSION as _ORACLE_SESSION
@@ -135,7 +139,7 @@ def q_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        await_all([q], 300)
 
     con = sqlite3.connect(db_path)
     rows = con.execute("SELECT o_orderstatus, cnt FROM kpi_status_counts").fetchall()
@@ -346,7 +350,7 @@ def q_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_all([q], 300)
     back = spark.read.parquet(os.path.join(out_root, "data"))
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -454,41 +458,26 @@ def q_stream_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        await_all([q], 300)
     return sink.read(spark)
 
 
 def q_stream_topn_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark-4 arbitrary-stateful processing (transformWithStateInPandas +
-    ValueState over the RocksDB provider, streaming/stateful.py): per-
-    event-type running top-3 values through a real availableNow drain.
-    Order-insensitive state update ⇒ the drained result equals the batch
-    window top-3; ties contribute the same VALUE at each rank in both
-    engines even when row identity differs, so the oracle is exact. The
-    state protocol needs google.protobuf on the workers — satisfied by
-    the vendored runtime (compat.ensure_protobuf_on_workers ships it via
-    addPyFile when no real wheel exists)."""
+    """Arbitrary-stateful processing (applyInPandasWithState, the Python
+    form of mapGroupsWithState; streaming/stateful.py): per-event-type
+    running top-3 values through a real availableNow drain, with the
+    top-3 array as the per-key state. Order-insensitive state update ⇒
+    the drained result equals the batch window top-3; ties contribute
+    the same VALUE at each rank in both engines even when row identity
+    differs, so the oracle is exact."""
     from ..streaming.stateful import streaming_topn_values
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    out = run_available_now(
+        _events_stream(spark, sf_dir),
+        lambda df: streaming_topn_values(df, "event_type", "value", n=3),
+        output_mode="update",
     )
-    try:
-        out = run_available_now(
-            _events_stream(spark, sf_dir),
-            lambda df: streaming_topn_values(df, "event_type", "value", n=3),
-            output_mode="update",
-        )
-        return out.groupBy("key", "rk").agg(F.max("value").alias("value"))
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
+    return out.groupBy("key", "rk").agg(F.max("value").alias("value"))
 
 
 ORACLE_STREAM_TOPN = """
@@ -581,7 +570,7 @@ QUERIES: dict[str, QuerySpec] = {
     "stream_topn_stateful": QuerySpec(
         q_stream_topn_stateful,
         ORACLE_STREAM_TOPN,
-        "Spark-4 stateful processor (transformWithState) running top-N",
+        "arbitrary-state operator (applyInPandasWithState) running top-N",
     ),
     "stream_matview": QuerySpec(
         q_stream_matview,

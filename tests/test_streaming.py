@@ -201,3 +201,51 @@ def test_append_text_file_guards_oversized_batch(spark, tmp_path):
     append_text_file(df, out, max_rows=100)
     with open(out) as fh:
         assert len(fh.read().splitlines()) == 100
+
+
+def _default_ckpt_base(monkeypatch, tmp_path) -> str:
+    """Point the default checkpoint base (under the temp dir) at tmp_path."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return os.path.join(str(tmp_path), "sparkstreaming_ckpt")
+
+
+def test_run_available_now_timeout_raises(spark, tmp_path, monkeypatch):
+    """A drain still running at its timeout is stopped and raises; it
+    never returns the partial memory table, and its checkpoint dir is
+    removed on this error path too."""
+    import time
+
+    base = _default_ckpt_base(monkeypatch, tmp_path)
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+
+    def slow(batches):
+        for pdf in batches:
+            time.sleep(5)
+            yield pdf
+
+    stream = spark.readStream.schema("id bigint").parquet(src)
+    with pytest.raises(TimeoutError):
+        run_available_now(
+            stream,
+            lambda df: df.mapInPandas(slow, "id bigint"),
+            output_mode="append",
+            query_name="timeout_probe",
+            timeout_sec=0.05,
+        )
+    assert all(q.name != "timeout_probe" for q in spark.streams.active)
+    assert os.listdir(base) == []
+
+
+def test_run_available_now_removes_own_checkpoint(spark, tmp_path, monkeypatch):
+    """A drain that makes its own checkpoint dir deletes it once the query
+    stops; the returned memory table stays readable."""
+    base = _default_ckpt_base(monkeypatch, tmp_path)
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    out = run_available_now(
+        spark.readStream.schema("id bigint").parquet(src),
+        lambda df: df.agg(F.sum("id").alias("s")),
+    )
+    assert os.listdir(base) == []
+    assert out.collect()[0].s == 45

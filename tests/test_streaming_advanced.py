@@ -4,10 +4,13 @@ SURVEY §4/§7)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from sparkstreaming_spark.streaming.pipeline import run_available_now
+from sparkstreaming_spark.streaming.stateful import streaming_topn_values
 
 
 def _write(spark, path, rows, schema):
@@ -117,48 +120,67 @@ def test_json_source_roundtrip(spark, tmp_path):
     assert sorted((r.id, r.name) for r in back.collect()) == [(1, "x"), (2, "y")]
 
 
-def test_streaming_topn_values_stateful_processor(spark):
-    """Spark-4 stateful processor (transformWithStateInPandas): per-key
-    running top-N equals batch top-N after an availableNow drain. Skips
-    where the protobuf-based state protocol isn't installed."""
-    import pytest
+_EVENTS_SCHEMA = (
+    "event_id bigint, ts timestamp_ntz, user_id bigint, "
+    "event_type string, value double, props string"
+)
 
-    pytest.importorskip("google.protobuf.descriptor")
-    from pyspark.sql import functions as F
 
-    from sparkstreaming_spark.streaming.pipeline import run_available_now
-    from sparkstreaming_spark.streaming.stateful import streaming_topn_values
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    schema = (
-        "event_id bigint, ts timestamp_ntz, user_id bigint, "
-        "event_type string, value double, props string"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet("/root/testdata/sf0.001")
-    )
-    out = run_available_now(
+def _topn_drain(stream):
+    return run_available_now(
         stream,
         lambda df: streaming_topn_values(df, "event_type", "value", n=3),
         output_mode="update",
-    ).groupBy("key", "rk").agg(F.max("value").alias("value"))
-    batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    )
+
+
+def _batch_top3(spark):
     from pyspark.sql import Window
 
+    batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     w = Window.partitionBy("event_type").orderBy(F.col("value").desc())
-    expect = (
-        batch.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(F.col("event_type").alias("key"), "rk", "value")
+    expect = batch.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 3)
+    return {(r.event_type, r.rk): r.value for r in expect.collect()}
+
+
+def _final_topn(out):
+    """Each rank's running value only rises, so its max over every
+    emitted update is the value after the last batch."""
+    final = out.groupBy("key", "rk").agg(F.max("value").alias("value"))
+    return {(r.key, r.rk): r.value for r in final.collect()}
+
+
+def test_streaming_topn_values_stateful_processor(spark):
+    """Stateful top-N (applyInPandasWithState): per-key running top-N
+    equals batch top-N after an availableNow drain in one micro-batch."""
+    stream = (
+        spark.readStream.schema(_EVENTS_SCHEMA)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet("/root/testdata/sf0.001")
     )
-    got = {(r.key, r.rk): r.value for r in out.collect()}
-    want = {(r.key, r.rk): r.value for r in expect.collect()}
-    assert got == want
+    assert _final_topn(_topn_drain(stream)) == _batch_top3(spark)
+
+
+def test_streaming_topn_values_across_micro_batches(spark, tmp_path):
+    """The same top-N over 3 part files drained one file per trigger: the
+    answer is only right if each key's top-N state carries across the
+    micro-batches."""
+    src = str(tmp_path / "events")
+    spark.read.parquet("/root/testdata/sf0.001/events.parquet").repartition(
+        3
+    ).write.parquet(src)
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 3
+    stream = (
+        spark.readStream.schema(_EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    out = _topn_drain(stream)
+    want = _batch_top3(spark)
+    # one update row per (key, rank) per batch a key appears in: more
+    # rows than the final answer proves several batches ran
+    assert out.count() > len(want)
+    assert _final_topn(out) == want
 
 
 def test_checkpoint_restart_resumes_not_reprocesses(spark, tmp_path):

@@ -32,6 +32,7 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -41,11 +42,14 @@ class Worker:
         self.name = name
         env = dict(os.environ)
         env["AB_EXTRA_CONF"] = json.dumps(extra_conf or {})
+        # stderr goes to a file (an unread pipe would fill and block the
+        # worker); its tail explains a worker that dies.
+        self.stderr = tempfile.TemporaryFile(mode="w+")
         self.proc = subprocess.Popen(
             [sys.executable, os.path.join(REPO, "tools", "ab_worker.py"), repo],
             stdin=subprocess.PIPE,
             stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
+            stderr=self.stderr,
             text=True,
             env=env,
         )
@@ -56,7 +60,11 @@ class Worker:
         while True:
             resp = self.proc.stdout.readline()
             if not resp:
-                raise RuntimeError(f"worker {self.name} died on {line!r}")
+                self.stderr.seek(0)
+                tail = "".join(self.stderr.readlines()[-40:])
+                raise RuntimeError(
+                    f"worker {self.name} died on {line!r}; stderr tail:\n{tail}"
+                )
             resp = resp.strip()
             if resp:
                 return resp
@@ -74,6 +82,7 @@ class Worker:
             self.proc.wait(timeout=60)
         except Exception:
             self.proc.kill()
+        self.stderr.close()
 
 
 def ensure_worktree(rev: str) -> str:
