@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Benchmark runner (driver contract).
 
-Runs the headline suite queries at $SPARK_GRAFT_SF_DIR (default
+Runs every registry query at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {name: sec},
  "sf": ...}.
@@ -63,356 +63,6 @@ def measure_query(run_once, runs_out: list | None = None) -> float:
     return med
 
 
-# Headline set: one per operator family; extend as the suite grows.
-HEADLINE = [
-    "flagship_pricing_summary",
-    "join_star_revenue",
-    "join_semi_anti",
-    "top_customers",
-    "window_rank",
-    "window_running",
-    "rollup_counts",
-    "distinct_counts",
-    "kpi_feature_means",
-    "setops",
-    "sql_shipping_priority",
-    "join_nation_volume",
-    "sub_avg_qty_threshold",
-    "tpch_q9_product_profit",
-    "tpch_q13_count_distribution",
-    "tpch_q18_large_orders",
-    "tpch_q21_waiting_supplier",
-    "evt_asof_orders",
-    "evt_range_join",
-    "evt_tumbling_window",
-    "evt_session_window",
-    "evt_json_props",
-    "doc_token_stats",
-    "doc_exact_dedup",
-    "doc_minhash_pairs",
-    "doc_dup_clusters",
-    "doc_simhash_pairs",
-    "doc_quality",
-    "doc_top_tokens",
-    "doc_bm25_topk",
-    "doc_split_counts",
-    "doc_repetition",
-    "doc_curation_pipeline",
-    "doc_chunks",
-    "merge_upsert",
-    "doc_pii_scrub",
-    "emb_kmeans_profile",
-    "evt_hypertable_rollup",
-    "evt_funnel",
-    "evt_retention",
-    "emb_knn_bruteforce",
-    "emb_knn_lsh",
-    "emb_knn_ivf",
-    "emb_near_dup_cosine",
-    "emb_dim_stats",
-    "doc_decontam",
-    "emb_label_cohesion",
-    "evt_variant_props",
-    "doc_sentences_udtf",
-    "src_custom_datasource",
-    "stat_profile",
-    "doc_dup_passages",
-    "cdc_apply_latest",
-    "scd2_history",
-    "evt_value_histogram",
-    "fuzzy_name_pairs",
-    "emb_pca_profile",
-    "evt_ewma",
-    "evt_interval_overlap",
-    "table_profile",
-    "emb_knn_sq8",
-    "src_file_provenance",
-    "doc_ngram_containment",
-    "evt_asof_tolerance",
-    "doc_weighted_sample",
-    "evt_approx_percentiles",
-    "doc_pack_sequences",
-    "doc_source_mixture",
-    "doc_upsample_epochs",
-    "doc_shuffle_shards",
-    "doc_length_curriculum",
-    "doc_nfc_normalize",
-    "emb_hard_negatives",
-    "doc_reservoir_sample",
-    "evt_skew_profile",
-    "ts_ohlc",
-    "layout_zorder_key",
-    "doc_bigram_logprob",
-    "evt_sessionize",
-    "table_fingerprint_orders",
-    "snapshot_diff_orders",
-    "evt_equidepth_hist",
-    "evt_approx_distinct",
-    "evt_bitmap_distinct",
-    "evt_hll_union",
-    "evt_sampled_mean",
-    "evt_top_paths",
-    "ts_interpolate",
-    "graph_triangles",
-    "evt_winsorized_stats",
-    "evt_mad_outliers",
-    "join_null_safe",
-    "doc_incremental_dedup",
-    "evt_psi_drift",
-    "emb_semantic_dedup",
-    "doc_markup_strip",
-    "sql_recursive_chain",
-    "evt_ks_test",
-    "evt_autocorr",
-    "doc_token_entropy",
-    "doc_bpe_encode",
-    "evt_trend_slopes",
-    "evt_chi_square",
-    "stream_incremental_dedup",
-    "udf_grouped_agg",
-    "src_arrow_batches",
-    "emb_standardize",
-    "evt_ivm_refresh",
-    "layout_hilbert_key",
-    "evt_range_frame",
-    "window_ranking_surface",
-    "sql_lateral_topn",
-    "evt_map_surface",
-    "doc_ngram_jaccard",
-    "setops_all",
-    "sql_unpivot",
-    "window_navigation_surface",
-    "evt_asof_forward",
-    "evt_merge_intervals",
-    "evt_stickiness",
-    "evt_decayed_engagement",
-    "evt_rfm_segments",
-    "doc_mime_sniff",
-    "evt_markov_transitions",
-    "basket_brand_lift",
-    "evt_ab_test",
-    "doc_token_pmi",
-    "geo_radius_pairs",
-    "evt_sliding_distinct",
-    "doc_readability",
-    "doc_tfidf_keywords",
-    "stream_chained_windows",
-    "evt_cusum_changepoint",
-    "evt_bootstrap_ci",
-    "doc_cross_source_dups",
-    "doc_rrf_fusion",
-    "rev_gini_by_nation",
-    "evt_benford",
-    "doc_audio_bands",
-    "evt_anova_f",
-    "udf_scalar_pandas",
-    "src_file_skipping_stats",
-    "evt_lift_curve",
-    "evt_auc",
-    "graph_kcore",
-    "src_binary_files",
-    "evt_backtest_mae",
-    "doc_k_anonymity",
-    "evt_skyline",
-    "scd2_pit_lookup",
-    "evt_attribution",
-    "agg_modern_surface",
-    "hof_surface",
-    "evt_path_entropy",
-    "evt_outage_gaps",
-    "stream_running_stats",
-    "gen_synthetic_profile",
-    "doc_feature_hashing",
-    "emb_knn_pq",
-    "evt_debounce",
-    "evt_activity_matrix",
-    "doc_zipf_fit",
-    "evt_peak_detection",
-    "doc_dedup_eval",
-    "ord_ship_latency",
-    "evt_inactive_users",
-    "emb_centroid_drift",
-    "evt_mom_change",
-    "doc_dup_rate_by_source",
-    "evt_user_growth",
-    "emb_knn_rerank",
-    "evt_seasonal_decompose",
-    "evt_session_corpus",
-    "doc_ngram_novelty",
-    "stream_broker_topic",
-    "ent_resolve_parts",
-    "ord_cohort_ltv",
-    "evt_survival_km",
-    "evt_forecast_linear",
-    "ivm_join_delta",
-    "doc_png_features",
-    "evt_theil_sen",
-    "evt_seasonal_anomalies",
-    "src_partition_pruned_join",
-    "src_schema_evolution",
-    "maint_compact_small_files",
-    "evt_user_typicality",
-    "doc_audio_tone_detect",
-    "layout_bucketed_join",
-    "doc_dp_histogram",
-    "stream_broker_enriched",
-    "emb_pca_contract",
-    "emb_kmeans_contract",
-    "doc_video_frame_probe",
-    "ml_pit_training_set",
-    "stream_quota_gate",
-    "streamck_quota_gate",
-    "streamck_incremental_dedup",
-    "streamck_chained_windows",
-    "streamck_curation",
-    "streamck_broker_enriched",
-    "evt_cross_correlation",
-    "evt_cuped",
-    "doc_mjpeg_frame_probe",
-    "doc_flac_probe",
-    "doc_g711_probe",
-    "doc_gif_probe",
-    "doc_media_meta_probe",
-    "doc_dsir_selection",
-    "doc_gopher_rules",
-    "doc_c4_line_filter",
-    "stream_gopher_gate",
-    "doc_corpus_build",
-    "doc_lang_alpha_sample",
-    "doc_fineweb_rules",
-    "doc_multimodal_ingest",
-    "doc_substr_spans",
-    "doc_substr_dedup",
-    "doc_substr_dedup_apply",
-    "doc_quality_classifier",
-    "stream_quality_gate",
-    "doc_kneser_ney_logprob",
-    "doc_bloom_decontam_gate",
-    "doc_gif_anim_probe",
-    "doc_h264_iframe_probe",
-    "doc_h264_gop_probe",
-    "emb_matryoshka_recall",
-    "doc_ccnet_buckets",
-    "doc_line_dedup",
-    "stream_lm_gate",
-    "doc_doremi_weights",
-    "doc_unigram_train",
-    "doc_unigram_encode",
-    "doc_h264_bframe_probe",
-    "doc_h264_chroma_probe",
-    "doc_h264_tdirect_probe",
-    "doc_h264_wpred_probe",
-    "doc_h264_multiref_probe",
-    "doc_h264_i16_probe",
-    "doc_h264_bwpred_probe",
-    "doc_h264_ibb_probe",
-    "emb_cluster_sample",
-    "doc_tokenizer_fertility",
-    # round-7 additions
-    "doc_kn_heldout",
-    "doc_domain_caps",
-    "doc_domain_mix",
-    "doc_url_dedup",
-    "doc_wordpiece_encode",
-    "doc_token_budget_plan",
-    "doc_chat_template",
-    "doc_dpo_pairs",
-    "stream_neardup_gate",
-    "doc_span_corruption",
-    "doc_length_batching",
-    "doc_ccnet_heldout",
-    # round-9: close the bench silent cap — every registry query is
-    # benched so a perf regression anywhere is visible in BENCH_DETAIL
-    "cube_counts",
-    "doc_audio_neardup",
-    "doc_blob_features",
-    "doc_blob_frames",
-    "doc_blob_meta",
-    "doc_bpe_merges",
-    "doc_cms_counts",
-    "doc_constraint_report",
-    "doc_dedup_best_survivor",
-    "doc_dedup_survivors",
-    "doc_heavy_hitters_mg",
-    "doc_image_neardup",
-    "doc_jsonl_roundtrip",
-    "doc_langid",
-    "doc_quarantine_split",
-    "doc_stratified_sample",
-    "doc_tfidf_cosine",
-    "doc_unigram_logprob",
-    "doc_vocab_encode",
-    "doc_winnow_fp",
-    "emb_norm_stats",
-    "evt_anomalies",
-    "evt_argmax",
-    "evt_from_json",
-    "evt_moving_avg",
-    "evt_percentiles",
-    "evt_regression",
-    "evt_running_by_user",
-    "evt_sliding_window",
-    "evt_window_analytics",
-    "filter_between",
-    "graph_pagerank",
-    "grouping_sets_counts",
-    "join_salted_skew",
-    "kpi_count_by_status",
-    "kpi_count_two_keys",
-    "kpi_global_count",
-    "kpi_loyalty_split",
-    "kpi_value_distribution",
-    "orc_roundtrip",
-    "outer_join_fill",
-    "pivot_qty",
-    "project_derive",
-    "scalar_functions",
-    "scalar_try_functions",
-    "sql_parameterized",
-    "sql_udf",
-    "stream_curation",
-    "stream_dedup",
-    "stream_dedup_watermarked",
-    "stream_events_windowed",
-    "stream_file_sink",
-    "stream_kpi_counts",
-    "stream_loyalty_split",
-    "stream_matview",
-    "stream_producer_consumer",
-    "stream_session_window",
-    "stream_static_join",
-    "stream_stream_join",
-    "stream_stream_left_join",
-    "stream_topn_stateful",
-    "stream_upsert_sink",
-    "stream_windowed",
-    "sub_exists_orders",
-    "sub_inactive_customers",
-    "sub_promo_revenue",
-    "sub_top_supplier",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_stock",
-    "tpch_q12_priority_counts",
-    "tpch_q16_supplier_count",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q20_excess_volume",
-    "ts_gap_fill",
-    "unpivot_measures",
-    "xml_roundtrip",
-    "stream_image_gate",
-    "stream_audio_gate",
-    "doc_image_dup_clusters",
-    "doc_image_dedup_eval",
-    "doc_image_neardup_hq",
-    "doc_audio_dup_clusters",
-    "doc_audio_dedup_eval",
-]
-
-
 # Fixed subset whose timings ride inline in the printed JSON line (one per
 # operator family, stable across rounds so BENCH_r{N} files stay comparable).
 CORE = [
@@ -469,21 +119,12 @@ def main() -> None:
     load_start = round(os.getloadavg()[0], 1)
     spark = get_spark("bench")
     registry = all_queries()
-    names = [n for n in HEADLINE if n in registry]
-    unbenched = sorted(set(registry) - set(HEADLINE))
-    if unbenched:
-        # tests/test_bench_coverage.py fails on this too — no silent caps
-        print(
-            f"WARNING: {len(unbenched)} registry queries not benched: "
-            f"{unbenched}",
-            file=sys.stderr,
-        )
     # warm-up: JVM + parquet footer caches, one light query
-    registry[names[0]].fn(spark, sf_dir).count()
+    registry[CORE[0]].fn(spark, sf_dir).count()
 
     timings: dict[str, float] = {}
     raw_runs: dict[str, list] = {}
-    for name in names:
+    for name in registry:
 
         def run_once(name: str = name) -> float:
             t0 = time.perf_counter()

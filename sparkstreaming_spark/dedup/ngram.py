@@ -58,7 +58,11 @@ def ngram_jaccard_pairs(
     # BOTH sides of the self-join — without it Spark re-runs the
     # tokenize+shingle+hash projection per consumer (~1.6x wall-clock
     # measured at sf0.1)
-    max_doc_freq = _resolve_doc_freq_cap(df, max_doc_freq)
+    # toks_df has one row per doc and is usually checkpointed: count it
+    # instead of rescanning the raw corpus
+    max_doc_freq = _resolve_doc_freq_cap(
+        df if toks_df is None else toks_df, max_doc_freq
+    )
     sh = _explode_shingles(
         _shingle_sets(df, id_col, text_col, shingle_n, toks_df=toks_df)
     ).localCheckpoint(eager=False)

@@ -38,6 +38,14 @@ def _sql_md5_64(expr: str) -> str:
     return f"cast(('0x' || substr(md5({expr}), 1, 15)) AS bigint)"
 
 
+def _bloom_pos_sql(key: str, salt: str, i: int, m_sql: str) -> str:
+    """Bloom bit position i of `key` mod `m_sql` — the DuckDB twin of
+    dedup/bloom.py::bloom_positions."""
+    h1 = _sql_md5_64(f"'{salt}:1:' || {key}")
+    h2 = _sql_md5_64(f"'{salt}:2:' || {key}")
+    return f"(({h1}) + {i} * ({h2})) % {m_sql}"
+
+
 # ------------------------------- queries ------------------------------------
 
 
@@ -2917,8 +2925,9 @@ QUERIES["doc_substr_dedup_apply"] = QuerySpec(
 def q_bloom_decontam_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter membership gate (dedup/bloom.py): screen the whole
     corpus against the English slice as the reference set (the
-    decontamination / seen-before shape) with a 4096-bit, k=3
-    Kirsch-Mitzenmacher filter folded into the plan as a bitmap
+    decontamination / seen-before shape) with a k=3
+    Kirsch-Mitzenmacher BloomIndex sized at ~10 bits per distinct
+    English text (at least 4096 bits), folded into the plan as a bitmap
     literal. Per lang: docs, Bloom-flagged docs, exactly-seen docs, and
     realized FALSE POSITIVES — the oracle recomputes every bit position
     from the same salted md5 double-hash and the same bitmap semantics,
@@ -2946,24 +2955,20 @@ def q_bloom_decontam_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bloom_sql(i: int) -> str:
-    h1 = _sql_md5_64("'decon:1:' || text")
-    h2 = _sql_md5_64("'decon:2:' || text")
-    return f"(({h1}) + {i} * ({h2})) % 4096"
-
+_DECON_POS = [_bloom_pos_sql("text", "decon", i, "(SELECT m FROM mx)")
+              for i in range(3)]
 
 ORACLE_BLOOM_DECONTAM = rf"""
 WITH ref AS (SELECT DISTINCT text FROM documents WHERE lang = 'en'),
-refpos AS (
-  SELECT DISTINCT unnest([{_bloom_sql(0)}, {_bloom_sql(1)}, {_bloom_sql(2)}])
-           AS p
-  FROM ref
-),
+nk AS (SELECT count(DISTINCT text) AS c FROM ref),
+mx AS MATERIALIZED (
+  SELECT ((greatest(4096, 10 * c) + 31) // 32) * 32 AS m FROM nk),
+refpos AS MATERIALIZED (
+  SELECT DISTINCT unnest([{', '.join(_DECON_POS)}]) AS p FROM ref),
 hits AS (
   SELECT doc_id, lang,
-         ({_bloom_sql(0)}) IN (SELECT p FROM refpos)
-         AND ({_bloom_sql(1)}) IN (SELECT p FROM refpos)
-         AND ({_bloom_sql(2)}) IN (SELECT p FROM refpos) AS bloom_hit,
+         {' AND '.join(f'({p}) IN (SELECT p FROM refpos)' for p in _DECON_POS)}
+           AS bloom_hit,
          text IN (SELECT text FROM ref) AS truly_seen
   FROM documents
 )

@@ -14,14 +14,17 @@ schema (Consumer.scala:49-52), T2 update mode + T3 running aggregates
 
 from __future__ import annotations
 
+import operator
 import os
 import sqlite3
 import tempfile
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..dedup.bloom import BloomIndex
 from ..sinks.upsert import UpsertSink
 from ..streaming.pipeline import (
     await_all,
@@ -1424,7 +1427,7 @@ QUERIES["stream_lm_gate"] = QuerySpec(
 NEARDUP_SPLIT = 5      # doc_id % 5 == 0 is the incoming crawl slice
 NEARDUP_PERM = 16
 NEARDUP_BANDS = 4
-NEARDUP_M = 16384      # Bloom bits over the corpus band keys
+NEARDUP_M = 16384      # floor of the Bloom size over the corpus band keys
 NEARDUP_K = 3
 NEARDUP_SALT = "ndgate"
 
@@ -1434,7 +1437,8 @@ def q_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of doc_minhash_pairs: the corpus (doc_id % 5 != 0) is indexed
     OFFLINE as MinHash-LSH band keys (dedup/minhash.py — the same
     16-perm/4-band signatures the batch pair-finder uses) compressed
-    into one 16384-bit Bloom bitmap (dedup/bloom.py), and each
+    into one Bloom bitmap (dedup/bloom.py BloomIndex: ~10 bits per
+    distinct band key, at least 16384), and each
     streaming document computes its own signature IN-ROW (shingle →
     md5 hash → per-permutation array_min, all higher-order
     expressions — no explode, no per-doc stateful aggregation, so the
@@ -1451,8 +1455,7 @@ def q_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate no matter the corpus size; the probe side is pure
     projection. This is the 100 TB deploy shape for fuzzy
     crawl-vs-corpus dedup: the full band table never ships to the
-    stream, only the fixed-size bitmap."""
-    from ..dedup.bloom import bloom_build_words, bloom_positions
+    stream, only the bitmap."""
     from ..dedup.minhash import (
         MERSENNE_P,
         lsh_bands,
@@ -1471,29 +1474,13 @@ def q_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                            num_perm=NEARDUP_PERM, shingle_n=2),
         num_perm=NEARDUP_PERM, bands=NEARDUP_BANDS,
     )
-    ckeys = cbands.select(
-        F.concat_ws(":", F.col("band_id").cast("string"),
-                    "band_hash").alias("bk")
-    ).persist()
-    # corpus-adaptive bitmap: ~10 bits per distinct band key holds the
-    # false-positive rate at the designed ~1% at ANY corpus size — a
-    # fixed m saturates to all-ones at ~10x corpus and drops every
-    # incoming doc. NEARDUP_M stays the floor, so small-corpus (driver
-    # testdata) results are unchanged.
-    from ..dedup.bloom import adaptive_bits
-
-    m = adaptive_bits(ckeys.distinct().count(), NEARDUP_M)
-    words = bloom_build_words(ckeys, "bk", m=m, k=NEARDUP_K,
-                              salt=NEARDUP_SALT)
-    # both consumers (count + word aggregate) have collected — release
-    # the cached band keys so multi-query sessions don't accumulate them
-    ckeys.unpersist()
-    # ONE hex-string literal (8 chars per 32-bit word): a per-word
-    # F.array literal is rebuilt as an expression tree of m/32 nodes
-    # referenced once per probe position — at the adaptive m it tripled
-    # the gate's wall time in plan/codegen cost alone. The string is a
-    # single plan node; bits extract with substring+conv per position.
-    bitmap_hex = "".join(f"{w & 0xFFFFFFFF:08x}" for w in words)
+    index = BloomIndex.build(
+        cbands.select(
+            F.concat_ws(":", F.col("band_id").cast("string"),
+                        "band_hash").alias("bk")
+        ),
+        "bk", k=NEARDUP_K, salt=NEARDUP_SALT, floor_m=NEARDUP_M,
+    )
 
     schema = (
         "doc_id bigint, text string, lang string, source string,"
@@ -1533,29 +1520,17 @@ def q_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows_per = NEARDUP_PERM // NEARDUP_BANDS
 
-    def band_hit(b: int):
+    def band_key(b: int):
         bh = F.md5(F.concat_ws(",", *[
             F.col(f"mh{b * rows_per + i}").cast("string")
             for i in range(rows_per)
         ]))
-        bk = F.concat_ws(":", F.lit(str(b)), bh)
-        hit = F.lit(True)
-        for pos in bloom_positions(bk, m, NEARDUP_K,
-                                   NEARDUP_SALT):
-            start = (F.floor(pos / 32).cast("int") * 8 + 1).cast("int")
-            word = F.conv(
-                F.substring(F.col("__bm"), start, F.lit(8)), 16, 10
-            ).cast("bigint")
-            shifted = F.floor(
-                word / F.pow(F.lit(2.0), F.pmod(pos, F.lit(32)))
-            ).cast("bigint")
-            hit = hit & (F.pmod(shifted, F.lit(2)) == 1)
-        return hit
+        return F.concat_ws(":", F.lit(str(b)), bh)
 
-    any_hit = band_hit(0)
-    for b in range(1, NEARDUP_BANDS):
-        any_hit = any_hit | band_hit(b)
-    sig = sig.withColumn("__bm", F.lit(bitmap_hex))
+    any_hit = reduce(
+        operator.or_,
+        [index.probe(band_key(b)) for b in range(NEARDUP_BANDS)],
+    )
     scored = sig.select(
         "doc_id", "source",
         (~((F.col("nsh") > 0) & any_hit)).alias("admitted"),
@@ -1572,7 +1547,7 @@ def q_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stream_neardup_oracle() -> str:
     from ..dedup.minhash import MERSENNE_P, minhash_params
-    from .llm import SQL_SHINGLES2, SQL_TOKS, _sql_md5_64
+    from .llm import SQL_SHINGLES2, SQL_TOKS, _bloom_pos_sql, _sql_md5_64
 
     mins = ",\n       ".join(
         f"min(({a} * h + {b}) % {MERSENNE_P}) AS mh{i}"
@@ -1589,18 +1564,10 @@ def _stream_neardup_oracle() -> str:
             for b in range(NEARDUP_BANDS)
         )
 
-    def pos_sql(i: int, key: str) -> str:
-        h1 = _sql_md5_64(f"'{NEARDUP_SALT}:1:' || {key}")
-        h2 = _sql_md5_64(f"'{NEARDUP_SALT}:2:' || {key}")
-        return f"(({h1}) + {i} * ({h2})) % (SELECT m FROM mx)"
-
-    in_ref = " AND ".join(
-        f"({pos_sql(i, 'bk')}) IN (SELECT p FROM refpos)"
-        for i in range(NEARDUP_K)
-    )
-    ref_positions = ", ".join(
-        pos_sql(i, "bk") for i in range(NEARDUP_K)
-    )
+    pos = [_bloom_pos_sql("bk", NEARDUP_SALT, i, "(SELECT m FROM mx)")
+           for i in range(NEARDUP_K)]
+    in_ref = " AND ".join(f"({p}) IN (SELECT p FROM refpos)" for p in pos)
+    ref_positions = ", ".join(pos)
     return rf"""
 WITH t AS (SELECT doc_id, source, {SQL_TOKS} AS toks FROM documents),
 shs AS (SELECT doc_id, source, list_distinct({SQL_SHINGLES2}) AS sh
@@ -1649,7 +1616,7 @@ QUERIES["stream_neardup_gate"] = QuerySpec(
 
 IMGGATE_SPLIT = 5       # doc_id % 5 == 0 is the incoming crawl slice
 IMGGATE_BANDS = 4       # 4 x 16-bit pHash bands
-IMGGATE_M = 16384       # Bloom bits over the corpus band keys
+IMGGATE_M = 16384       # floor of the Bloom size over the corpus band keys
 IMGGATE_K = 3
 IMGGATE_SALT = "imggate"
 
@@ -1661,10 +1628,10 @@ def q_stream_image_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id % 5 != 0) is hashed OFFLINE with the integer-exact 64-bit
     DCT pHash (each image decoded through the real GIF/LZW codec by the
     SAME shared worker the batch pass uses), its 4x16-bit band keys are
-    compressed into one 16384-bit Bloom bitmap, and each streaming
-    image is decoded + hashed by a STATELESS Arrow mapInPandas pass,
-    then probes its 4 band keys against the bitmap folded into the plan
-    as a literal. Any band hit -> near-dup suspect -> dropped. Bloom
+    compressed into one Bloom bitmap (BloomIndex, as in
+    stream_neardup_gate), and each streaming image is decoded + hashed
+    by a STATELESS Arrow mapInPandas pass, then probes its 4 band keys
+    against the bitmap folded into the plan as a literal. Any band hit -> near-dup suspect -> dropped. Bloom
     false positives drop at the designed ~1% rate; the oracle replays
     hash bits AND bloom positions exactly, so even which images
     false-positive is value-hash-checked. Accounting per (admitted,)
@@ -1673,8 +1640,7 @@ def q_stream_image_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB crawl): the index is one bounded aggregate
     (<= m distinct positions) no matter the corpus size; the probe
     side is decode + projection with zero streaming state — the band
-    table never ships to the stream, only the fixed-size bitmap."""
-    from ..dedup.bloom import adaptive_bits, bloom_build_words, bloom_positions
+    table never ships to the stream, only the bitmap."""
     from .platform_ops import phash_image_map
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1701,23 +1667,14 @@ def q_stream_image_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("string"),
         )
 
-    ckeys = corpus_fp.select(
-        F.explode(
-            F.array(*[band_key(b) for b in range(IMGGATE_BANDS)])
-        ).alias("bk")
+    index = BloomIndex.build(
+        corpus_fp.select(
+            F.explode(
+                F.array(*[band_key(b) for b in range(IMGGATE_BANDS)])
+            ).alias("bk")
+        ),
+        "bk", k=IMGGATE_K, salt=IMGGATE_SALT, floor_m=IMGGATE_M,
     )
-    ckeys = ckeys.persist()
-    # corpus-adaptive bitmap (see stream_neardup_gate): ~10 bits per
-    # distinct band key, floored at IMGGATE_M for small corpora
-    m = adaptive_bits(ckeys.distinct().count(), IMGGATE_M)
-    words = bloom_build_words(
-        ckeys, "bk", m=m, k=IMGGATE_K, salt=IMGGATE_SALT
-    )
-    # both consumers (count + word aggregate) have collected — release
-    # the cached band keys so multi-query sessions don't accumulate them
-    ckeys.unpersist()
-    # single hex-string bitmap literal (see stream_neardup_gate)
-    bitmap_hex = "".join(f"{w & 0xFFFFFFFF:08x}" for w in words)
 
     schema = (
         "doc_id bigint, text string, lang string, source string,"
@@ -1731,24 +1688,10 @@ def q_stream_image_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(phash_image_map, "doc_id bigint, phash bigint, dhash bigint")
     )
 
-    def band_hit(b: int):
-        bk = band_key(b)
-        hit = F.lit(True)
-        for pos in bloom_positions(bk, m, IMGGATE_K, IMGGATE_SALT):
-            start = (F.floor(pos / 32).cast("int") * 8 + 1).cast("int")
-            word = F.conv(
-                F.substring(F.col("__bm"), start, F.lit(8)), 16, 10
-            ).cast("bigint")
-            shifted = F.floor(
-                word / F.pow(F.lit(2.0), F.pmod(pos, F.lit(32)))
-            ).cast("bigint")
-            hit = hit & (F.pmod(shifted, F.lit(2)) == 1)
-        return hit
-
-    any_hit = band_hit(0)
-    for b in range(1, IMGGATE_BANDS):
-        any_hit = any_hit | band_hit(b)
-    probe_fp = probe_fp.withColumn("__bm", F.lit(bitmap_hex))
+    any_hit = reduce(
+        operator.or_,
+        [index.probe(band_key(b)) for b in range(IMGGATE_BANDS)],
+    )
     scored = probe_fp.select("doc_id", (~any_hit).alias("admitted"))
     return run_available_now(
         scored,
@@ -1761,7 +1704,7 @@ def q_stream_image_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_image_gate_oracle() -> str:
-    from .llm import _sql_md5_64
+    from .llm import _bloom_pos_sql
     from .platform_ops import phash_bits_cte
 
     # pack the 64 bits into 4 16-bit band values: bit index 8u+v,
@@ -1778,16 +1721,10 @@ def _stream_image_gate_oracle() -> str:
         for k in range(IMGGATE_BANDS)
     )
 
-    def pos_sql(i: int, key: str) -> str:
-        h1 = _sql_md5_64(f"'{IMGGATE_SALT}:1:' || {key}")
-        h2 = _sql_md5_64(f"'{IMGGATE_SALT}:2:' || {key}")
-        return f"(({h1}) + {i} * ({h2})) % (SELECT m FROM mx)"
-
-    in_ref = " AND ".join(
-        f"({pos_sql(i, 'bk')}) IN (SELECT p FROM refpos)"
-        for i in range(IMGGATE_K)
-    )
-    ref_positions = ", ".join(pos_sql(i, "bk") for i in range(IMGGATE_K))
+    pos = [_bloom_pos_sql("bk", IMGGATE_SALT, i, "(SELECT m FROM mx)")
+           for i in range(IMGGATE_K)]
+    in_ref = " AND ".join(f"({p}) IN (SELECT p FROM refpos)" for p in pos)
+    ref_positions = ", ".join(pos)
     return f"""
 WITH {phash_bits_cte()},
 allbands AS MATERIALIZED ({band_rows}),
@@ -1832,7 +1769,7 @@ def q_stream_audio_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant group so novel crawl audio exists) are FLAC-decoded and
     fingerprinted OFFLINE by the same shared worker doc_audio_neardup
     uses (dedup/audiofp.py), their 4x16-bit band keys compressed into
-    one 16384-bit Bloom bitmap folded into the plan; each streaming
+    one Bloom bitmap (BloomIndex) folded into the plan; each streaming
     clip decodes + fingerprints in a STATELESS Arrow mapInPandas pass
     and probes its band keys. Any hit -> dropped. The oracle replays
     fingerprint bits and bloom positions exactly (even false positives
@@ -1840,7 +1777,6 @@ def q_stream_audio_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the image gate — bounded index
     aggregate, stateless linear probe, no band table on the stream."""
-    from ..dedup.bloom import adaptive_bits, bloom_build_words, bloom_positions
     from .platform_ops import afp_audio_map
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1864,22 +1800,14 @@ def q_stream_audio_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("string"),
         )
 
-    ckeys = corpus_fp.select(
-        F.explode(
-            F.array(*[band_key(b) for b in range(IMGGATE_BANDS)])
-        ).alias("bk")
+    index = BloomIndex.build(
+        corpus_fp.select(
+            F.explode(
+                F.array(*[band_key(b) for b in range(IMGGATE_BANDS)])
+            ).alias("bk")
+        ),
+        "bk", k=IMGGATE_K, salt=AUDGATE_SALT, floor_m=IMGGATE_M,
     )
-    ckeys = ckeys.persist()
-    # corpus-adaptive bitmap (see stream_neardup_gate): ~10 bits per
-    # distinct band key, floored at IMGGATE_M for small corpora
-    m = adaptive_bits(ckeys.distinct().count(), IMGGATE_M)
-    words = bloom_build_words(
-        ckeys, "bk", m=m, k=IMGGATE_K, salt=AUDGATE_SALT
-    )
-    # both consumers have collected — release the cached band keys
-    ckeys.unpersist()
-    # single hex-string bitmap literal (see stream_neardup_gate)
-    bitmap_hex = "".join(f"{w & 0xFFFFFFFF:08x}" for w in words)
 
     schema = (
         "doc_id bigint, text string, lang string, source string,"
@@ -1893,24 +1821,10 @@ def q_stream_audio_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(afp_audio_map, "doc_id bigint, afp bigint")
     )
 
-    def band_hit(b: int):
-        bk = band_key(b)
-        hit = F.lit(True)
-        for pos in bloom_positions(bk, m, IMGGATE_K, AUDGATE_SALT):
-            start = (F.floor(pos / 32).cast("int") * 8 + 1).cast("int")
-            word = F.conv(
-                F.substring(F.col("__bm"), start, F.lit(8)), 16, 10
-            ).cast("bigint")
-            shifted = F.floor(
-                word / F.pow(F.lit(2.0), F.pmod(pos, F.lit(32)))
-            ).cast("bigint")
-            hit = hit & (F.pmod(shifted, F.lit(2)) == 1)
-        return hit
-
-    any_hit = band_hit(0)
-    for b in range(1, IMGGATE_BANDS):
-        any_hit = any_hit | band_hit(b)
-    probe_fp = probe_fp.withColumn("__bm", F.lit(bitmap_hex))
+    any_hit = reduce(
+        operator.or_,
+        [index.probe(band_key(b)) for b in range(IMGGATE_BANDS)],
+    )
     scored = probe_fp.select("doc_id", (~any_hit).alias("admitted"))
     return run_available_now(
         scored,
@@ -1923,7 +1837,7 @@ def q_stream_audio_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_audio_gate_oracle() -> str:
-    from .llm import _sql_md5_64
+    from .llm import _bloom_pos_sql
     from .platform_ops import afp_bits_cte
 
     # pack the 64 bits into 4 16-bit band values: bit index f*4+c,
@@ -1940,16 +1854,10 @@ def _stream_audio_gate_oracle() -> str:
         for k in range(IMGGATE_BANDS)
     )
 
-    def pos_sql(i: int, key: str) -> str:
-        h1 = _sql_md5_64(f"'{AUDGATE_SALT}:1:' || {key}")
-        h2 = _sql_md5_64(f"'{AUDGATE_SALT}:2:' || {key}")
-        return f"(({h1}) + {i} * ({h2})) % (SELECT m FROM mx)"
-
-    in_ref = " AND ".join(
-        f"({pos_sql(i, 'bk')}) IN (SELECT p FROM refpos)"
-        for i in range(IMGGATE_K)
-    )
-    ref_positions = ", ".join(pos_sql(i, "bk") for i in range(IMGGATE_K))
+    pos = [_bloom_pos_sql("bk", AUDGATE_SALT, i, "(SELECT m FROM mx)")
+           for i in range(IMGGATE_K)]
+    in_ref = " AND ".join(f"({p}) IN (SELECT p FROM refpos)" for p in pos)
+    ref_positions = ", ".join(pos)
     return f"""
 WITH {afp_bits_cte()},
 allbands AS MATERIALIZED ({band_rows}),

@@ -1,10 +1,12 @@
 """Bloom membership gate (dedup/bloom.py): no false negatives, bounded
 false positives, bitmap/semantics invariants."""
 
-import pandas as pd
-import pytest
+import hashlib
 
-from sparkstreaming_spark.dedup.bloom import bloom_build_words, bloom_gate
+import pandas as pd
+from pyspark.sql import functions as F
+
+from sparkstreaming_spark.dedup.bloom import BloomIndex, bloom_gate
 
 
 def _df(spark, vals, col="key"):
@@ -28,20 +30,52 @@ def test_false_positive_rate_is_bounded(spark):
 
 
 def test_bitmap_is_bounded_and_deterministic(spark):
-    corpus = _df(spark, [f"member-{i}" for i in range(500)])
-    w1 = bloom_build_words(corpus, "key", m=4096, k=3)
-    w2 = bloom_build_words(corpus, "key", m=4096, k=3)
-    assert w1 == w2
-    assert len(w1) == 4096 // 32
-    assert all(0 <= w < (1 << 32) for w in w1)
+    corpus = _df(spark, [f"member-{i}" for i in range(400)])
+    i1 = BloomIndex.build(corpus, "key", k=3, floor_m=4096)
+    i2 = BloomIndex.build(corpus, "key", k=3, floor_m=4096)
+    assert i1 == i2
+    assert i1.m == 4096 and len(i1.words) == 4096 // 64
+    assert all(-(1 << 63) <= w < (1 << 63) for w in i1.words)
     # different salt -> different bitmap
-    w3 = bloom_build_words(corpus, "key", m=4096, k=3, salt="other")
-    assert w3 != w1
+    i3 = BloomIndex.build(corpus, "key", k=3, salt="other", floor_m=4096)
+    assert i3.words != i1.words
 
 
-def test_m_must_be_word_aligned(spark):
-    with pytest.raises(ValueError, match="multiple of 32"):
-        bloom_build_words(_df(spark, ["x"]), "key", m=100)
+def _py_positions(key: str, m: int, k: int, salt: str) -> list[int]:
+    def md5_64(s: str) -> int:
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    h1, h2 = md5_64(f"{salt}:1:{key}"), md5_64(f"{salt}:2:{key}")
+    return [(h1 + i * h2) % m for i in range(k)]
+
+
+def test_probe_matches_python_bit_test_at_adaptive_m(spark):
+    """1639 distinct keys size m to 16416 (not a power of two, so the
+    last int64 word is half used); every probe answer must equal a
+    pure-Python Bloom over the same hashes, including members whose
+    position is bit 63 of a word (its sign bit) or bit 31."""
+    members = [f"member-{i}" for i in range(1639)]
+    index = BloomIndex.build(_df(spark, members), "key", k=3, salt="t")
+    assert index.m == 16416
+    bits = {p for key in members for p in _py_positions(key, index.m, 3, "t")}
+    probe = members[:300] + [f"outsider-{i}" for i in range(3000)]
+    got = {
+        r["key"]: r["hit"]
+        for r in _df(spark, probe)
+        .select("key", index.probe(F.col("key")).alias("hit"))
+        .collect()
+    }
+    want = {
+        key: all(p in bits for p in _py_positions(key, index.m, 3, "t"))
+        for key in probe
+    }
+    assert got == want
+    probed_bits = {
+        p % 64 for key in members[:300]
+        for p in _py_positions(key, index.m, 3, "t")
+    }
+    assert {31, 63} <= probed_bits
+    assert any(want[f"outsider-{i}"] for i in range(3000))  # realized FPs
 
 
 def test_adaptive_bits_floor_and_growth():

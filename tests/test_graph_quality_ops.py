@@ -74,13 +74,12 @@ def test_pagerank_iteration_has_partial_aggregate(spark):
 
 def test_pagerank_persisted_out_cleanup(spark):
     """Repeated pagerank calls in one session must not accumulate cached
-    blocks when the caller uses the persisted_out cleanup path: storage
-    returns to its baseline RDD count after each call's unpersist."""
+    blocks when the caller uses the persisted_out cleanup path: after
+    each call's unpersist, none of its handles' RDDs is left in storage."""
     from sparkstreaming_spark.operators.graph import pagerank
 
     jsc = spark.sparkContext._jsc.sc()
-    spark.catalog.clearCache()
-    baseline = len(jsc.getRDDStorageInfo())
+    cm = spark._jsparkSession.sharedState().cacheManager()
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string"
@@ -90,9 +89,16 @@ def test_pagerank_persisted_out_cleanup(spark):
         result = pagerank(edges, iterations=2, persisted_out=handles).collect()
         assert len(result) == 3
         assert len(handles) == 3  # e0, deg, adj
+        ids = {
+            cm.lookupCachedData(h._jdf).get().cachedRepresentation()
+            .cacheBuilder().cachedColumnBuffers().id()
+            for h in handles
+        }
+        assert ids <= {info.id() for info in jsc.getRDDStorageInfo()}
         for h in handles:
             h.unpersist(blocking=True)
-        assert len(jsc.getRDDStorageInfo()) == baseline
+        stored = {info.id() for info in jsc.getRDDStorageInfo()}
+        assert not ids & stored, ids & stored
 
 
 # ------------------------------------------------------------ tfidf cosine

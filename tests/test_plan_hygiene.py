@@ -93,13 +93,19 @@ def test_no_cartesian_and_no_row_python(spark, name):
         )
 
 
-# The three Bloom-gate stream queries persist their corpus band keys for
-# the (count, word-aggregate) double consumption and MUST unpersist before
+# BloomIndex.build persists its key frame for the (distinct count,
+# position aggregate) double consumption and MUST unpersist before
 # returning — a leaked cache accumulates across queries in a multi-query
-# session (the round-10 defect at stream_image_gate's sibling). Run each
-# gate end-to-end at smoke scale and assert no NEW persistent RDDs remain.
+# session. Run each Bloom gate end-to-end at smoke scale and assert no
+# NEW persistent RDDs remain.
 @pytest.mark.parametrize(
-    "name", ["stream_neardup_gate", "stream_image_gate", "stream_audio_gate"]
+    "name",
+    [
+        "doc_bloom_decontam_gate",
+        "stream_neardup_gate",
+        "stream_image_gate",
+        "stream_audio_gate",
+    ],
 )
 def test_bloom_gates_leave_no_cached_frames(spark, name):
     jsc = spark.sparkContext._jsc.sc()
@@ -108,5 +114,5 @@ def test_bloom_gates_leave_no_cached_frames(spark, name):
     after = jsc.getPersistentRDDs().size()
     assert after <= before, (
         f"{name} leaked {after - before} persisted frame(s) — "
-        "missing unpersist() after bloom_build_words"
+        "missing unpersist() in BloomIndex.build"
     )

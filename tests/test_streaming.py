@@ -5,6 +5,7 @@ reconstitution, watermark late-data handling."""
 from __future__ import annotations
 
 import os
+import shutil
 import sqlite3
 import tempfile
 
@@ -47,7 +48,8 @@ def _orders_stream(spark, sf_dir):
 def test_multi_query_concurrency(spark):
     """The reference's 5-concurrent-query topology (T6): N specs over one
     source, each upserting its own table; all results must match batch."""
-    db = os.path.join(tempfile.mkdtemp(), "kpi.db")
+    tmp = tempfile.mkdtemp()
+    db = os.path.join(tmp, "kpi.db")
     specs = [
         StreamingAggSpec(
             "by_status", ["o_orderstatus"], lambda: [F.count(F.lit(1)).alias("cnt")]
@@ -72,24 +74,28 @@ def test_multi_query_concurrency(spark):
             val_cols=["cnt"],
         )
 
-    queries = start_kpi_queries(
-        _orders_stream(spark, SF_DIR_SMOKE),
-        specs,
-        sink_factory,
-        trigger_available_now=True,
-    )
-    await_all(queries, timeout_sec=300)
+    try:
+        queries = start_kpi_queries(
+            _orders_stream(spark, SF_DIR_SMOKE),
+            specs,
+            sink_factory,
+            checkpoint_base=os.path.join(tmp, "ckpt"),
+            trigger_available_now=True,
+        )
+        await_all(queries, timeout_sec=300)
 
-    batch = read_table(spark, SF_DIR_SMOKE, "orders")
-    con = sqlite3.connect(db)
-    for spec in specs:
-        got = dict(con.execute(f"SELECT * FROM {spec.name}").fetchall())
-        want = {
-            r[0]: r[1]
-            for r in batch.groupBy(spec.group_cols[0]).count().collect()
-        }
-        assert got == want, f"{spec.name}: {got} != {want}"
-    con.close()
+        batch = read_table(spark, SF_DIR_SMOKE, "orders")
+        con = sqlite3.connect(db)
+        for spec in specs:
+            got = dict(con.execute(f"SELECT * FROM {spec.name}").fetchall())
+            want = {
+                r[0]: r[1]
+                for r in batch.groupBy(spec.group_cols[0]).count().collect()
+            }
+            assert got == want, f"{spec.name}: {got} != {want}"
+        con.close()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_upsert_idempotent(spark):
